@@ -1,0 +1,5 @@
+"""Repository benchmark: workloads, tracing and output checks.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` (see perfbench/README.md).
+"""
