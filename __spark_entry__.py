@@ -1085,7 +1085,7 @@ SELECT probe_id, doc_id, jaccard, rnk FROM (
 # -- embedding similarity ---------------------------------------------------
 
 def _cos_sql(a: str, b: str) -> str:
-    # zero-norm guard mirrors similarity._cosine: cos = 0.0 when either
+    # zero-norm guard mirrors similarity._cosine_pre: cos = 0.0 when either
     # norm is 0 (raw 0/0 is NaN and the two engines ORDER NaN
     # differently, so unguarded parity would break on zero vectors)
     denom = (f"(sqrt(list_dot_product({a}, {a})) * "

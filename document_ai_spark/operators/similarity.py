@@ -17,49 +17,201 @@ unbounded self-join at 10^12 vectors.
 
 IVF uses a trained codebook: deterministic seeded Lloyd iterations
 (init = first-k, few iterations, id-sampled training set) entirely as
-DataFrame ops — no driver collect; centroids stay a k-row DataFrame that
-is broadcast into the assignment join.
+DataFrame ops — no driver collect of the corpus; the k-row codebook is
+the only thing shipped to the tasks.
 
-Dot products are computed with built-in higher-order functions
-(zip_with + aggregate) — JVM-side, no Python.
+One cosine definition: `_cosine_pre`, dot / (na * nb) over
+zip_with + aggregate with a zero-denominator guard (0.0), NULL for
+ragged or NULL-element vectors. Probe-side top-k scoring evaluates it
+in the JVM. The four O(pairs) scorers — the near-dup pair sweep, the
+SemDeDup greedy sweep, the argmax centroid assignment and the
+batch-vs-index leg — hand whole Arrow blocks to ONE NumPy kernel
+(`_cand_cos_exact`: BLAS prefilter, bit-exact left-fold recheck) and
+ONE Python mirror for dirty blocks (`_cos_slow`). Rounding,
+thresholding and argmax ordering stay in the JVM, so results are
+bit-identical to the pure-JVM forms (kept as the parity reference in
+tests/test_similarity_edges.py).
 """
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..session import fan_out
 from .dedup import _cap_bucket_items
 
 
-def _cosine(a, b):
-    """Cosine similarity with a ZERO-NORM GUARD: a zero embedding (an
-    empty document's vector) makes the denominator 0 and the raw
-    division yields NaN — and Spark orders NaN ABOVE every real number,
-    so an unguarded NaN >= cos_min is TRUE and two garbage vectors
-    would count as near-dups (review finding; DuckDB's NaN ordering
-    differs, so parity would also break on such inputs). Defined as
-    cos = 0.0 when either norm is 0: zero vectors match nothing —
-    malformed upstream, exact dedup owns byte-identical empties."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return F.when(na * nb == 0.0, F.lit(0.0)).otherwise(dot / (na * nb))
+def item_norm(emb_col):
+    """Per-item L2 norm, sqrt(aggregate(acc + v*v)) — computed once per
+    ITEM and carried beside the vector (field/column ``nrm``), so every
+    O(pairs) scorer pays one fold per pair instead of three. NULL for a
+    NULL vector or one holding a NULL element."""
+    return F.sqrt(F.aggregate(emb_col, F.lit(0.0),
+                              lambda acc, v: acc + v * v))
 
 
 def _cosine_pre(a, b, na, nb):
-    """_cosine with both norms PRECOMPUTED (round-6 optimization, guide
-    §1.2 per-task work): every scoring path here evaluates O(pairs)
-    cosines, and _cosine's two inline norm folds tripled the per-pair
-    array work — precomputing item_norm once per ITEM leaves one
-    zip_with+aggregate fold per pair. The norm expression is the same
-    sqrt(aggregate(acc + v*v)) fold, so na*nb and dot/(na*nb) see
-    bit-identical inputs and results are unchanged (oracle-verified)."""
+    """Cosine of two array<double> columns given their item_norm norms,
+    with a ZERO-NORM GUARD: a zero embedding (an empty document's
+    vector) makes the denominator 0 and the raw division yields NaN —
+    and Spark orders NaN ABOVE every real number, so an unguarded
+    NaN >= cos_min is TRUE and two garbage vectors would count as
+    near-dups (DuckDB's NaN ordering differs, so parity would also
+    break on such inputs). cos = 0.0 when na * nb == 0: zero vectors
+    match nothing — malformed upstream, exact dedup owns byte-identical
+    empties."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0), lambda acc, v: acc + v)
     return F.when(na * nb == 0.0, F.lit(0.0)).otherwise(dot / (na * nb))
+
+
+# ---------------------------------------------------------------------------
+# The block kernel: exact cosines of whole Arrow blocks
+# ---------------------------------------------------------------------------
+
+# Safety margin of the raw-cosine floors: JVM round(x, 6) moves x by at
+# most 5e-7 (+ sub-ulp decimal->double conversion error), so no raw
+# cosine below cos_min - 1e-6 can round to >= cos_min, and none at or
+# above cos_min + 1e-6 can round below it. The margin only controls how
+# many raw cosines cross the Python->JVM boundary; the JVM applies the
+# exact round + threshold.
+_SWEEP_MARGIN = 1e-6
+
+
+def _cand_cos_exact(X, Y, nx, ny, floor, mask=None):
+    """(i, j, cos) for every pair of rows X[i], Y[j] allowed by ``mask``
+    whose EXACT cosine is NaN or >= ``floor`` — a scalar, a per-row (X)
+    array, or a function of the prefilter block returning either (the
+    argmax floor). ``nx``/``ny`` are the item_norm norms.
+
+    A BLAS gram block X @ Y.T finds candidates with 1e-9 slack, then
+    the exact left-fold dot product is recomputed for candidates only.
+    Soundness of the slack: |fl_blas(dot) - fl_fold(dot)| <=
+    2*d*u*sum|x_k y_k| <= 2*d*u*(nx*ny) (Cauchy-Schwarz), i.e. the BLAS
+    cosine is within ~1.4e-14 of the fold cosine at d = 64 — 5 orders
+    under the slack — and non-finite BLAS entries are always
+    candidates. The returned cosines are the bit-exact fold (one
+    rounded multiply + one rounded add per dimension, ascending —
+    identical to aggregate(zip_with(...))) divided by nx * ny, and a
+    zero denominator scores exactly 0.0 (the `_cosine_pre` guard).
+
+    Why BLAS at all: the fold over every pair costs d passes over an
+    n x n block — ~25 GB of memory traffic for a 4096-item cluster —
+    while dgemm is cache-blocked; the exact fold is then paid only for
+    the (rare) candidate pairs."""
+    den = nx[:, None] * ny[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        C = X @ Y.T
+        C /= den
+        np.copyto(C, 0.0, where=(den == 0.0))
+        fl = np.asarray(floor(C) if callable(floor) else floor, dtype=float)
+        fc = fl[:, None] if fl.ndim else fl     # per-row floors by row
+        cand = ~np.isfinite(C) | (C >= fc - 1e-9)
+        if mask is not None:
+            cand &= mask
+        ii, jj = np.nonzero(cand)
+        if not len(ii):         # the common case: skip the d-step fold
+            return ii, jj, np.zeros(0)
+        acc = np.zeros(len(ii))
+        for k in range(X.shape[1]):
+            acc += X[ii, k] * Y[jj, k]      # exact left fold
+        dend = den[ii, jj]
+        cos = np.where(dend == 0.0, 0.0, acc / dend)
+    keep = np.isnan(cos) | (cos >= (fl[ii] if fl.ndim else fl))
+    return ii[keep], jj[keep], cos[keep]
+
+
+def _cos_slow(xs, ys, nx, ny, floor, mask=None):
+    """`_cand_cos_exact`'s contract over Python lists that may be NULL,
+    hold NULL elements or be ragged — the ONE mirror of the JVM
+    cosine's evaluation order (`_cosine_pre` over zip_with's NULL
+    padding):
+      1. a NULL list or element makes its norm NULL -> cosine NULL;
+      2. a REAL zero denominator short-circuits to 0.0 (the CASE), even
+         against a ragged partner — the dot is never evaluated;
+      3. a ragged pair pads with NULL -> dot and cosine NULL;
+      4. otherwise the left-fold dot / (nx * ny).
+    NULL cosines are always returned (as None, for the JVM to order or
+    drop); a callable floor sees them as -inf."""
+    def cos(a, b, den):
+        if a is None or b is None or None in a or None in b:
+            return None
+        if den == 0.0:
+            return 0.0
+        if len(a) != len(b):
+            return None
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc / den
+
+    C = np.full((len(xs), len(ys)), -np.inf)
+    got = {}
+    for i, a in enumerate(xs):
+        for j, b in enumerate(ys):
+            if mask is None or mask[i, j]:
+                got[i, j] = c = cos(a, b, float(nx[i] * ny[j]))
+                if c is not None:
+                    C[i, j] = c
+    fl = np.broadcast_to(np.asarray(
+        floor(C) if callable(floor) else floor, dtype=float), (len(xs),))
+    out = [(i, j, c) for (i, j), c in got.items()
+           if c is None or c != c or c >= fl[i]]
+    return (np.array([o[0] for o in out], dtype=np.int64),
+            np.array([o[1] for o in out], dtype=np.int64),
+            [o[2] for o in out])
+
+
+class _Vecs:
+    """A list<double> Arrow array unpacked once per batch. ``block(i0,
+    i1)`` is rows [i0, i1) as a dense (n, d) float64 view, or None —
+    "dirty" — when a row is NULL, holds a NULL element, or the rows'
+    dimensions differ: exactly the rows whose JVM cosines can meet
+    zip_with's NULL padding. ``rows`` gives the lists `_cos_slow`
+    needs."""
+
+    def __init__(self, arr):
+        self.arr = arr
+        self.offs = arr.offsets.to_numpy()
+        self.dims = np.diff(self.offs)
+        vals = arr.values
+        self.vals = vals.to_numpy(zero_copy_only=False)
+        self.bad = arr.is_null().to_numpy(zero_copy_only=False)
+        if vals.null_count:
+            nn = np.concatenate(([0], np.cumsum(
+                vals.is_null().to_numpy(zero_copy_only=False))))
+            self.bad = self.bad | (nn[self.offs[1:]] > nn[self.offs[:-1]])
+
+    def block(self, i0, i1):
+        dims = self.dims[i0:i1]
+        if self.bad[i0:i1].any() or dims.min() != dims.max():
+            return None
+        return self.vals[self.offs[i0]:self.offs[i1]].reshape(
+            i1 - i0, int(dims[0]))
+
+    def rows(self, i0, i1):
+        return [self.arr[k].as_py() for k in range(i0, i1)]
+
+
+def _block_pairs(xv, x0, x1, yv, y0, y1, nx, ny, floor, mask=None):
+    """Candidate pairs of items [x0, x1) x [y0, y1) (indices relative to
+    x0 / y0): the block kernel when both sides are clean blocks of one
+    dimension, the Python mirror otherwise."""
+    X = xv.block(x0, x1)
+    Y = X if (yv, y0, y1) == (xv, x0, x1) else yv.block(y0, y1)
+    if X is not None and Y is not None and X.shape[1] == Y.shape[1]:
+        return _cand_cos_exact(X, Y, nx, ny, floor, mask)
+    return _cos_slow(xv.rows(x0, x1), yv.rows(y0, y1), nx, ny, floor, mask)
+
+
+def _unpack(items):
+    """(offsets, struct, vectors, norms) of a list<struct<..., e, nrm>>
+    Arrow column: row r's items are struct[offs[r]:offs[r + 1]]."""
+    st = items.values
+    return (items.offsets.to_numpy(), st, _Vecs(st.field("e")),
+            st.field("nrm").to_numpy(zero_copy_only=False))
 
 
 def brute_force_topk(emb: DataFrame, probe_ids, k: int = 5) -> DataFrame:
@@ -154,270 +306,75 @@ IVF_ITERS = 2
 IVF_SAMPLE_MOD = 2   # train on vec_id % MOD == 0 (deterministic sample)
 
 
-def _assign_with_cos(base: DataFrame, cents: DataFrame,
-                     impl: str | None = None) -> DataFrame:
-    """Argmax-cosine centroid per vector, KEEPING the winning cos_c;
-    ties to the lowest centroid_id. The ONE assignment rule shared by
-    Lloyd training, semdedup, and the incremental SemanticIndex (a
-    tie-break or rounding change lands once, preserving their
-    batch == incremental parity contract).
-
-    Implementations (parity-tested equal): "arrow" (default) — BLAS
-    candidate scoring + JVM argmax over ~1 candidate/row; "window" —
-    the k-way broadcast cross join + row_number window, which shuffles
-    every vector k times with its embedding aboard."""
-    if impl is None:
-        impl = EMB_SWEEP_DEFAULT
-    if impl == "arrow":
-        return _assign_arrow(base, cents)
-    scored = (base.withColumn("_nrm", item_norm(F.col("emb")))
-              .crossJoin(F.broadcast(
-                  cents.withColumn("_cnrm", item_norm(F.col("cent")))))
-              .withColumn("cos_c", F.round(_cosine_pre(
-                  "emb", "cent", F.col("_nrm"), F.col("_cnrm")), 6)))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_c"), F.asc("centroid_id"))
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vec_id", "emb", "centroid_id", "cos_c"))
+def _argmax_floor(C):
+    """Per-row floor of the argmax candidates: every centroid within
+    2e-6 of the row's best prefilter score — the 1e-6 rounding quantum
+    the JVM argmax compares at, doubled to cover the ~1.4e-14
+    BLAS-vs-fold error. A NaN cosine beats every double in Spark's DESC
+    order, so a row holding one keeps only its NaNs (and NULLs)."""
+    return np.where(np.isnan(C), np.inf, C).max(axis=1) - 2e-6
 
 
-def _assign_arrow(base: DataFrame, cents: DataFrame) -> DataFrame:
-    """Vectorized argmax-cosine assignment (guide §4.2 + §2.3).
+def _assign_with_cos(base: DataFrame, cents: DataFrame) -> DataFrame:
+    """Argmax-cosine centroid per (vec_id, emb) row, KEEPING the winning
+    cos_c; ties to the lowest centroid_id. The ONE assignment rule
+    shared by Lloyd training, ivf_topk, semdedup and the incremental
+    SemanticIndex (a tie-break or rounding change lands once,
+    preserving their batch == incremental parity contract).
 
     The codebook is collected to the driver (k rows — control-plane
     sized, like the convergence scalars) and shipped in the task
-    closure. Per Arrow batch, a BLAS gram X @ C.T scores every
-    (vector, centroid) pair; per row, every centroid within 2e-6 of
-    the row's best BLAS score (margin = the 1e-6 rounding quantum the
-    JVM argmax compares at, doubled for the ~1.4e-14 BLAS-vs-fold
-    error) is emitted as a CANDIDATE with its EXACT left-fold cosine,
-    and the JVM resolves `round(cos, 6) DESC, centroid_id ASC` over
-    the ~1.05 candidates/row — so rounding and the final ordering stay
-    in the JVM, bit-equal to the window form, while the exchange
-    carries each embedding ~once instead of k times and the per-pair
-    fold work collapses into dgemm.
-
-    SQL-semantics edges mirrored exactly: zero-norm sides score 0.0
-    (the CASE guard); NaN cosines win (Spark orders NaN above all
-    doubles, desc NULLS LAST below them); vectors whose dimension
-    differs from the codebook's, or with null elements / null arrays,
-    get NULL cosines against every centroid, and the window rule then
-    picks the LOWEST centroid_id with cos_c NULL — emitted directly."""
+    closure. Per Arrow batch the block kernel scores every (vector,
+    centroid) pair and emits, per vector, every centroid within 2e-6 of
+    its best score (`_argmax_floor`) with its EXACT cosine; the JVM
+    resolves `round(cos, 6) DESC, centroid_id ASC` over the ~1.05
+    candidates/row. That is the k-way cross join + row_number window,
+    bit-equal, with each embedding crossing the exchange ~once instead
+    of k times. Dirty rows (NULL / NULL-element / wrong-dimension
+    vectors) get NULL cosines from the Python mirror — except that a
+    real zero denominator scores 0.0 — and NULLs sort last, exactly as
+    in the window."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    crows = cents.select("centroid_id", "cent").collect()
-    if not crows:
-        return base.sparkSession.createDataFrame(
-            [], StructType(list(base.schema.fields) + [
-                StructField("centroid_id",
-                            cents.schema["centroid_id"].dataType),
-                StructField("cos_c", DoubleType())]))
-    cids = [r["centroid_id"] for r in crows]
+    crows = cents.select("centroid_id", "cent",
+                         item_norm(F.col("cent")).alias("nrm")).collect()
     cvecs = [r["cent"] for r in crows]
-    min_cid = min(cids)
-    clean = all(v is not None and all(x is not None for x in v)
-                and len(v) == len(cvecs[0]) for v in cvecs)
-
-    id_type = base.schema["vec_id"].dataType
-    cid_type = cents.schema["centroid_id"].dataType
+    cids = [r["centroid_id"] for r in crows]
+    cn = np.array([np.nan if r["nrm"] is None else r["nrm"] for r in crows])
     out_schema = StructType([
-        StructField("vec_id", id_type),
+        StructField("vec_id", base.schema["vec_id"].dataType),
         StructField("emb", base.schema["emb"].dataType),
-        StructField("centroid_id", cid_type),
+        StructField("centroid_id", cents.schema["centroid_id"].dataType),
         StructField("cos_raw", DoubleType())])
 
     def assign(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        if not clean:
-            # Degenerate codebook (null/ragged centroids): defer to the
-            # per-row Python mirror of the zip_with semantics.
-            yield from _assign_batches_slow(batches, cids, cvecs, pa)
+        if not cids:
             return
-        CM = np.array([[float(x) for x in v] for v in cvecs])
-        k, dc = CM.shape
-        cn = np.zeros(k)
-        for t in range(dc):
-            cn += CM[:, t] * CM[:, t]       # exact fold
-        cn = np.sqrt(cn)
-        CMT = CM.T.copy()
-
+        cv = _Vecs(pa.array(cvecs, type=pa.list_(pa.float64())))
+        cid = pa.array(cids)
         for batch in batches:
-            vec_col = batch.column("vec_id")
-            embl = batch.column("emb")
-            if isinstance(embl, pa.ChunkedArray):
-                embl = embl.combine_chunks()
-            m = len(embl)
+            m = batch.num_rows
             if m == 0:
                 continue
-            offs = embl.offsets.to_numpy()
-            dims = np.diff(offs)
-            has_null = embl.null_count > 0 or embl.values.null_count > 0
-            uniform = (not has_null and dims.min() == dims.max()
-                       and int(dims[0]) == dc)
-            if not uniform:
-                # Split: rows that can't score (wrong dim / nulls) get
-                # the NULL-cos verdict (lowest centroid_id); clean
-                # dc-dim rows are scored below, row by row.
-                yield from _assign_mixed(batch, embl, offs, dims, dc,
-                                         CM, cn, cids, min_cid, pa, np)
-                continue
-            X = embl.values.to_numpy(zero_copy_only=False) \
-                .reshape(m, dc)
-            nx = np.zeros(m)
-            for t in range(dc):
-                nx += X[:, t] * X[:, t]     # exact fold
-            nx = np.sqrt(nx)
-            B = X @ CMT
-            den = nx[:, None] * cn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                B /= den
-            np.copyto(B, 0.0, where=(den == 0.0))
-            nanm = np.isnan(B)
-            Bf = np.where(nanm, np.inf, B)
-            best = Bf.max(axis=1)
-            cand = nanm | (Bf >= (best - 2e-6)[:, None])
-            ri, ci = np.nonzero(cand)
-            acc = np.zeros(len(ri))
-            for t in range(dc):
-                acc += X[ri, t] * CM[ci, t]     # exact left fold
-            dend = nx[ri] * cn[ci]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / dend
-            cos = np.where(dend == 0.0, 0.0, cos)
+            ii, jj, cos = _block_pairs(
+                _Vecs(batch.column("emb")), 0, m, cv, 0, len(cids),
+                batch.column("nrm").to_numpy(zero_copy_only=False), cn,
+                _argmax_floor)
+            rows = pa.array(ii)
             yield pa.RecordBatch.from_arrays(
-                [vec_col.take(pa.array(ri)),
-                 embl.take(pa.array(ri)),
-                 pa.array([cids[c] for c in ci]),
+                [batch.column("vec_id").take(rows),
+                 batch.column("emb").take(rows), cid.take(pa.array(jj)),
                  pa.array(cos, type=pa.float64())],
                 names=["vec_id", "emb", "centroid_id", "cos_raw"])
 
-    cand_df = base.select("vec_id", "emb").mapInArrow(assign, out_schema)
+    cand = (base.select("vec_id", "emb", item_norm(F.col("emb")).alias("nrm"))
+            .mapInArrow(assign, out_schema))
     w = Window.partitionBy("vec_id").orderBy(
         F.desc(F.round("cos_raw", 6)), F.asc("centroid_id"))
-    return (cand_df.withColumn("rn", F.row_number().over(w))
+    return (cand.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("vec_id", "emb", "centroid_id",
                     F.round("cos_raw", 6).alias("cos_c")))
-
-
-def _assign_mixed(batch, embl, offs, dims, dc, CM, cn, cids, min_cid,
-                  pa, np):
-    """Per-row scoring for batches with ragged/null rows, mirroring
-    the SQL CASE order exactly: a NULL norm (null array / null
-    elements) makes every cosine NULL (lowest-centroid_id verdict);
-    a REAL zero den scores 0.0 via the CASE short-circuit EVEN when
-    the dimensions are ragged (the dot is never evaluated); only then
-    does a ragged dot become NULL."""
-    vec_col = batch.column("vec_id")
-    ri_out, cid_out, cos_out = [], [], []
-    for r in range(len(embl)):
-        row = embl[r].as_py()
-        if row is None or any(v is None for v in row):
-            # NULL norm -> NULL against every centroid.
-            ri_out.append(r)
-            cid_out.append(min_cid)
-            cos_out.append(None)
-            continue
-        x = np.array(row) if row else np.zeros(0)
-        nx = 0.0
-        for v in row:
-            nx = nx + v * v
-        nx = nx ** 0.5
-        if len(row) != dc:
-            # Ragged vs the codebook: zero-den pairs score 0.0 (CASE
-            # short-circuit); every other cosine is NULL (padded dot).
-            zero = [c for c in range(CM.shape[0])
-                    if nx * cn[c] == 0.0]
-            if zero:
-                for c in zero:
-                    ri_out.append(r)
-                    cid_out.append(cids[c])
-                    cos_out.append(0.0)
-            else:
-                ri_out.append(r)
-                cid_out.append(min_cid)
-                cos_out.append(None)
-            continue
-        # exact fold against every centroid; tiny k
-        for c in range(CM.shape[0]):
-            den = nx * cn[c]
-            if den == 0.0:
-                cos = 0.0
-            else:
-                acc = 0.0
-                for t in range(dc):
-                    acc = acc + x[t] * CM[c, t]
-                cos = acc / den
-            ri_out.append(r)
-            cid_out.append(cids[c])
-            cos_out.append(float(cos))
-    if ri_out:
-        yield pa.RecordBatch.from_arrays(
-            [vec_col.take(pa.array(ri_out)),
-             embl.take(pa.array(ri_out)),
-             pa.array(cid_out),
-             pa.array(cos_out, type=pa.float64())],
-            names=["vec_id", "emb", "centroid_id", "cos_raw"])
-
-
-def _assign_batches_slow(batches, cids, cvecs, pa):
-    """Whole-input fallback for degenerate (null/ragged) codebooks:
-    reproduce zip_with's NULL-pad cosine per (row, centroid) and let
-    the JVM argmax sort it out. Correctness-only path."""
-    for batch in batches:
-        vec_col = batch.column("vec_id")
-        embl = batch.column("emb")
-        if isinstance(embl, pa.ChunkedArray):
-            embl = embl.combine_chunks()
-        ri_out, cid_out, cos_out = [], [], []
-        for r in range(len(embl)):
-            row = embl[r].as_py()
-            for cid, cv in zip(cids, cvecs):
-                cos = _py_zipwith_cos(row, cv)
-                ri_out.append(r)
-                cid_out.append(cid)
-                cos_out.append(cos)
-        if ri_out:
-            yield pa.RecordBatch.from_arrays(
-                [vec_col.take(pa.array(ri_out)),
-                 embl.take(pa.array(ri_out)),
-                 pa.array(cid_out),
-                 pa.array(cos_out, type=pa.float64())],
-                names=["vec_id", "emb", "centroid_id", "cos_raw"])
-
-
-def _py_zipwith_cos(a, b):
-    """Python mirror of round-free _cosine_pre over possibly null /
-    ragged lists, in the SQL CASE's evaluation order: NULL norms first
-    (-> NULL), then the zero-den short-circuit (-> 0.0, even ragged),
-    then the padded dot (ragged -> NULL)."""
-    if a is None or any(v is None for v in a):
-        return None
-    if b is None or any(v is None for v in b):
-        return None
-    na = 0.0
-    for v in a:
-        na = na + v * v
-    nb = 0.0
-    for v in b:
-        nb = nb + v * v
-    den = (na ** 0.5) * (nb ** 0.5)
-    if den == 0.0:
-        return 0.0
-    if len(a) != len(b):
-        return None                     # padded dot -> NULL
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc / den
-
-
-def _assign(base: DataFrame, cents: DataFrame) -> DataFrame:
-    """_assign_with_cos without the score column (Lloyd's shape)."""
-    return _assign_with_cos(base, cents).drop("cos_c")
 
 
 def kmeans_codebook(emb: DataFrame, k: int = IVF_K, iters: int = IVF_ITERS,
@@ -457,7 +414,7 @@ def kmeans_codebook(emb: DataFrame, k: int = IVF_K, iters: int = IVF_ITERS,
         F.col("vec_id").alias("centroid_id"), F.col("emb").alias("cent"))
     try:
         for _ in range(iters):
-            assigned = _assign(train, cents)
+            assigned = _assign_with_cos(train, cents).drop("cos_c")
             means = (
                 assigned.select("centroid_id",
                                 F.posexplode("emb").alias("pos", "v"))
@@ -498,10 +455,12 @@ def ivf_topk(emb: DataFrame, probe_ids, k: int = 5,
         else kmeans_codebook(emb, n_clusters)
     base = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-    assigned = _assign(base, cents)             # data side: top-1 cluster
+    assigned = _assign_with_cos(base, cents).drop("cos_c")   # top-1 cluster
     probe_base = base.where(F.col("vec_id").isin(list(probe_ids)))
     probe_scored = probe_base.crossJoin(F.broadcast(cents)).withColumn(
-        "cos_c", F.round(_cosine("emb", "cent"), 6))
+        "cos_c", F.round(_cosine_pre(
+            "emb", "cent", item_norm(F.col("emb")),
+            item_norm(F.col("cent"))), 6))
     wp = Window.partitionBy("vec_id").orderBy(
         F.desc("cos_c"), F.asc("centroid_id"))
     probes = (probe_scored.withColumn("rn", F.row_number().over(wp))
@@ -532,11 +491,6 @@ def ivf_topk(emb: DataFrame, probe_ids, k: int = 5,
 EMB_LSH_BANDS = 4
 EMB_LSH_ROWS = 8     # sign bits per band -> 256 buckets/band
 EMB_MAX_BUCKET = 4096
-# Default pair-sweep implementation: "arrow" (vectorized NumPy over
-# Arrow batches — guide §4.2) or "sql" (pure JVM HOF expression). The
-# two are bit-identical (parity-tested); "sql" remains for deployments
-# that must keep plans Python-free.
-EMB_SWEEP_DEFAULT = "arrow"
 
 
 def _band_bucket(e, band: int, rows: int):
@@ -550,8 +504,7 @@ def _band_bucket(e, band: int, rows: int):
 def embedding_near_dups(emb: DataFrame, cos_min: float = 0.95,
                         bands: int = EMB_LSH_BANDS,
                         rows: int = EMB_LSH_ROWS,
-                        max_bucket: int = EMB_MAX_BUCKET,
-                        sweep: str | None = None) -> DataFrame:
+                        max_bucket: int = EMB_MAX_BUCKET) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded sign-LSH.
 
     `bands` bands of `rows` sign bits over disjoint dimension slices: a
@@ -578,275 +531,91 @@ def embedding_near_dups(emb: DataFrame, cos_min: float = 0.95,
         F.struct(F.lit(band).alias("band"),
                  F.element_at("bks", band + 1).alias("bucket"))
         for band in range(bands)])
-    # Per-item L2 norm computed ONCE map-side (round 6, guide §1.2): the
-    # sweep below is O(pairs) and the old inline _cosine re-folded both
-    # norms per PAIR — 3 array folds/pair down to 1. Same sqrt(fold)
-    # expression, so rounded cosines are bit-identical.
+    # Per-item L2 norm computed ONCE map-side, before the band explode.
     banded = (base.withColumn("bks", bucket_vec)
               .withColumn("nrm", item_norm(F.col("emb")))
               .select("vec_id", "emb", "bks", "nrm",
                       F.explode(band_keys).alias("bk"))
               .select("vec_id", "emb", "bks", "nrm", "bk.band", "bk.bucket"))
+    return _bucket_pairs(banded, cos_min, max_bucket)
+
+
+def _bucket_pairs(banded: DataFrame, cos_min: float,
+                  max_bucket: int) -> DataFrame:
+    """(id_a, id_b, cos_sim) near-dup pairs inside each (band, bucket)
+    group of a banded (vec_id, emb, bks, nrm, band, bucket) frame —
+    items vec_id-sorted and capped, each pair once, at its first
+    colliding band. Shared by embedding_near_dups and the incremental
+    EmbeddingIndex."""
     grouped = (
         banded.groupBy("band", "bucket")
-        .agg(F.collect_list(F.struct("vec_id", "emb", "bks", "nrm"))
-             .alias("items"))
+        .agg(F.collect_list(F.struct(
+            F.col("vec_id").alias("v"), F.col("emb").alias("e"),
+            "bks", "nrm")).alias("items"))
         .where(F.size("items") > 1)
     )
-    grouped = _cap_bucket_items(grouped, max_bucket)
-    if sweep is None:
-        sweep = EMB_SWEEP_DEFAULT
-    if sweep == "arrow":
-        return _sweep_pairs_arrow(grouped, cos_min)
-    return _sweep_pairs_sql(grouped, cos_min)
+    return _sweep_pairs(_cap_bucket_items(grouped, max_bucket), cos_min)
 
 
-def _sweep_pairs_sql(grouped: DataFrame, cos_min: float) -> DataFrame:
-    """Per-bucket pair sweep as a pure JVM higher-order expression.
-
-    Round-6 sweep shape (guide §1.2/§2.3): score and threshold INSIDE
-    the per-bucket HOF — the old form materialized a struct carrying
-    BOTH full embeddings for every candidate pair, exploded all of
-    them, and only then scored and filtered; now only surviving
-    (id_a, id_b, cos_sim) triples are ever materialized/exploded.
-    Self-pair guard (duplicate vec_id input rows) lives in the
-    candidate filter; cosine/round/threshold expressions are the same
-    ops in the same order as round 5, so output rows are bit-identical."""
-    first_band = (
-        "CASE WHEN band = 0 THEN true ELSE NOT exists("
-        "  slice(zip_with(x.bks, y.bks, (a, c) -> a = c), 1, band), "
-        "  t -> t) END"
-    )
-    pair_expr = (
-        "flatten(transform(items, (x, i) -> "
-        "  filter(transform(filter(slice(items, i + 2, size(items)), "
-        f"           y -> x.vec_id != y.vec_id AND ({first_band})), y -> "
-        "     struct(x.vec_id AS id_a, y.vec_id AS id_b, "
-        "            round(CASE WHEN x.nrm * y.nrm = 0.0D THEN 0.0D ELSE "
-        "              aggregate(zip_with(x.emb, y.emb, (a, b) -> a * b), "
-        "                        cast(0.0 as double), (acc, v) -> acc + v) "
-        "              / (x.nrm * y.nrm) END, 6) AS cos_sim)), "
-        f"    p -> p.cos_sim >= {float(cos_min)!r})))"
-    )
-    return (grouped.select(F.explode(F.expr(pair_expr)).alias("p"))
-            .select("p.*"))
-
-
-# Safety margin for the Arrow sweep's raw-cosine pre-filter: JVM
-# round(x, 6) moves x by at most 5e-7 (+ sub-ulp decimal->double
-# conversion error), so no raw cosine below cos_min - 1e-6 can round to
-# >= cos_min. The margin only controls how many NON-survivors cross the
-# Python->JVM boundary; the JVM applies the exact round + threshold.
-_SWEEP_MARGIN = 1e-6
-
-
-def _cand_cos_exact(np, X, nr, floor, extra_mask=None):
-    """(ii, jj, cos) for every strict-upper-triangle pair whose EXACT
-    cosine could reach ``floor``: a BLAS gram matrix (X @ X.T) finds
-    candidates with 1e-9 slack, then the exact left-fold dot product
-    is recomputed for candidates only.
-
-    Soundness of the slack: |fl_blas(dot) - fl_fold(dot)| <=
-    2*d*u*sum|x_k y_k| <= 2*64*1.1e-16*(na*nb), i.e. the BLAS cosine
-    is within ~1.4e-14 of the fold cosine — 5 orders under the 1e-9
-    slack — and non-finite BLAS entries are unconditionally candidates.
-    The returned cos values are the bit-exact fold (one rounded
-    multiply + one rounded add per dimension, ascending — identical to
-    aggregate(zip_with(...))); NaN cosines are included (callers
-    decide their fate). Zero-norm pairs are EXCLUDED (den == 0);
-    callers that can accept them (thresholds <= 0 score them 0.0 via
-    the CASE guard) must add them separately.
-
-    Why BLAS at all: the previous kernel materialized the full n x n
-    fold via d outer-product passes — ~25 GB of memory traffic for a
-    4096-item cluster — while dgemm is cache-blocked; the exact fold
-    is then paid only for the (rare) candidate pairs."""
-    n, d = X.shape
-    den = nr[:, None] * nr[None, :]
-    C = X @ X.T if d else np.zeros((n, n))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        C /= den
-    cand = (den != 0.0) & (~np.isfinite(C) | (C >= floor - 1e-9))
-    cand &= ~np.tri(n, dtype=bool)          # strict upper triangle
-    if extra_mask is not None:
-        cand &= extra_mask
-    ii, jj = np.nonzero(cand)
-    if len(ii) == 0:
-        return ii, jj, np.zeros(0)
-    acc = np.zeros(len(ii))
-    for k in range(d):
-        acc += X[ii, k] * X[jj, k]          # exact left fold
-    return ii, jj, acc / (nr[ii] * nr[jj])
-
-
-def _sweep_pairs_arrow(grouped: DataFrame, cos_min: float) -> DataFrame:
-    """Vectorized per-bucket pair sweep: mapInArrow + NumPy (guide §4.2
-    "hand whole batches to vectorized native libraries").
-
-    Bit-parity contract with _sweep_pairs_sql (parity-tested in
-    tests/test_similarity_edges.py):
-      * products and the dot-product accumulation run in IEEE float64
-        in the SAME order as the JVM fold (one outer-product
-        multiply-add per dimension, ascending — each step is one
-        rounded multiply and one rounded add, exactly zip_with +
-        aggregate's left fold);
-      * norms are NOT recomputed — the JVM-computed `nrm` field is
-        used, and den = nrm_a * nrm_b / division are single correctly-
-        rounded IEEE ops in both runtimes;
-      * the final round-half-up + `>= cos_min` run in the JVM on the
-        surviving RAW cosines (no Python rounding anywhere); the NumPy
-        side pre-filters with a conservative margin (>= cos_min - 1e-6,
-        or NaN — Spark orders NaN above all doubles so NaN cosines
-        survive the JVM filter, and the pre-filter must not drop them;
-        zero-norm pairs score exactly 0.0 as in _cosine);
-      * pairs whose cosine would be NULL JVM-side (ragged dimensions —
-        zip_with pads with null — or null vector elements) are dropped,
-        which is exactly what the JVM's `NULL >= cos_min` filter does.
-    Candidate semantics (upper-triangle of the vec_id-sorted capped
-    bucket, self-pair guard, first-collision-band dedup over `bks`) are
-    identical. Cost: the O(n^2 d) sweep runs as ~d vectorized
-    numpy ops per bucket instead of n^2 interpreted lambda folds —
-    measured 8x on the sf1.0 sweep stage."""
+def _sweep_pairs(grouped: DataFrame, cos_min: float) -> DataFrame:
+    """Pairs of every capped `items: array<struct<v, e, bks, nrm>>`
+    group scoring round(cos, 6) >= cos_min. Candidates: the upper
+    triangle of the vec_id-sorted items, minus duplicate-id self-pairs,
+    minus pairs that already collide in an earlier band (`bks` — the
+    shuffle-free multi-band dedup). The block kernel pre-filters at
+    cos_min - 1e-6 and passes NaN cosines (Spark orders NaN above
+    every double, so they survive the filter) and NULL ones (dirty
+    pairs, which the filter drops); the JVM applies the exact round +
+    threshold on the survivors."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     thr = float(cos_min) - _SWEEP_MARGIN
     # id type is generic (long ids in the registry, string ids in the
     # index/streaming callers) — carry the input's own vec_id type.
-    id_type = grouped.schema["items"].dataType.elementType["vec_id"].dataType
+    id_type = grouped.schema["items"].dataType.elementType["v"].dataType
     out_schema = StructType([
         StructField("id_a", id_type), StructField("id_b", id_type),
         StructField("cos_raw", DoubleType())])
 
     def sweep(batches):
-        import numpy as np
-        import pyarrow as pa
-
         for batch in batches:
-            bands_col = batch.column("band").to_numpy(zero_copy_only=False)
-            items = batch.column("items")
-            if isinstance(items, pa.ChunkedArray):
-                items = items.combine_chunks()
-            offs = items.offsets.to_numpy()
-            struct = items.values
-            vec_ids = struct.field("vec_id").to_numpy(zero_copy_only=False)
-            nrms = struct.field("nrm").to_numpy(zero_copy_only=False)
-            embl = struct.field("emb")
-            emb_offs = embl.offsets.to_numpy()
-            bksl = struct.field("bks")
-            bks_offs = bksl.offsets.to_numpy()
-            bks_vals = bksl.values.to_numpy(zero_copy_only=False)
-            emb_has_null = (embl.null_count > 0
-                            or embl.values.null_count > 0)
-            if not emb_has_null:
-                emb_vals = embl.values.to_numpy(zero_copy_only=False)
-            acc_a, acc_b, acc_c = [], [], []
-            for r in range(len(items)):
+            bands = batch.column("band").to_numpy(zero_copy_only=False)
+            offs, st, vecs, nrm = _unpack(batch.column("items"))
+            ids = st.field("v")
+            idn = ids.to_numpy(zero_copy_only=False)
+            bks = st.field("bks")
+            bk_offs = bks.offsets.to_numpy()
+            bk_vals = bks.values.to_numpy(zero_copy_only=False)
+            ia, ib, cs = [], [], []
+            for r in range(batch.num_rows):
                 i0, i1 = offs[r], offs[r + 1]
-                n = i1 - i0
-                if n < 2:
+                if i1 - i0 < 2:
                     continue
-                ids = vec_ids[i0:i1]
-                nr = nrms[i0:i1]
-                e0, e1 = emb_offs[i0], emb_offs[i1]
-                dims = np.diff(emb_offs[i0:i1 + 1])
-                # Ragged dims or null elements -> NULL cosines JVM-side
-                # -> dropped by the `>= cos_min` filter; mirror by
-                # emitting nothing for the affected pairs. Mixed-dim
-                # buckets keep their uniform-dim majority via the
-                # general (rare) per-pair path below.
-                uniform = dims.min() == dims.max()
-                if not uniform or emb_has_null:
-                    _sweep_bucket_slow(embl, i0, i1, ids, nr, bks_vals,
-                                       bks_offs, bands_col[r], thr,
-                                       acc_a, acc_b, acc_c)
-                    continue
-                d = int(dims[0])
-                if d == 0:
-                    X = np.zeros((n, 0))
-                else:
-                    X = emb_vals[e0:e1].reshape(n, d)
-                # Candidate mask: self-pair guard + first-collision-
-                # band rule, applied BEFORE any cosine work.
-                pm = ids[:, None] != ids[None, :]
-                band = int(bands_col[r])
-                if band > 0:
-                    B = bks_vals[bks_offs[i0]:bks_offs[i1]] \
-                        .reshape(n, -1)[:, :band]
-                    pm &= (B[:, None, :] != B[None, :, :]).all(axis=2)
-                ii, jj, cos = _cand_cos_exact(np, X, nr, thr, pm)
-                keep = (cos >= thr) | np.isnan(cos)
-                if keep.any():
-                    acc_a.append(ids[ii[keep]])
-                    acc_b.append(ids[jj[keep]])
-                    acc_c.append(cos[keep])
-                if thr <= 0.0:
-                    # zero-norm pairs score exactly 0.0 (the CASE
-                    # guard) and pass a non-positive threshold.
-                    den0 = (nr[:, None] * nr[None, :]) == 0.0
-                    den0 &= ~np.tri(n, dtype=bool)
-                    den0 &= pm
-                    zi, zj = np.nonzero(den0)
-                    if len(zi):
-                        acc_a.append(ids[zi])
-                        acc_b.append(ids[zj])
-                        acc_c.append(np.zeros(len(zi)))
-            if acc_a:
-                pa_id = struct.field("vec_id").type
+                g = idn[i0:i1]
+                mask = np.triu(g[:, None] != g[None, :], 1)
+                band = int(bands[r])
+                if band:
+                    B = bk_vals[bk_offs[i0]:bk_offs[i1]] \
+                        .reshape(i1 - i0, -1)[:, :band]
+                    mask &= (B[:, None, :] != B[None, :, :]).all(axis=2)
+                ii, jj, cos = _block_pairs(vecs, i0, i1, vecs, i0, i1,
+                                           nrm[i0:i1], nrm[i0:i1], thr,
+                                           mask)
+                if len(ii):
+                    ia.append(ii + i0)
+                    ib.append(jj + i0)
+                    cs.append(pa.array(cos, type=pa.float64()))
+            if ia:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(acc_a)).cast(pa_id),
-                     pa.array(np.concatenate(acc_b)).cast(pa_id),
-                     pa.array(np.concatenate(acc_c), type=pa.float64())],
+                    [ids.take(pa.array(np.concatenate(ia))),
+                     ids.take(pa.array(np.concatenate(ib))),
+                     pa.concat_arrays(cs)],
                     names=["id_a", "id_b", "cos_raw"])
 
     pairs = grouped.select("band", "items").mapInArrow(sweep, out_schema)
-    # Exact JVM round + threshold on survivors only — identical
-    # expressions to the SQL sweep, so results are bit-identical.
     return (pairs.withColumn("cos_sim", F.round("cos_raw", 6))
             .where(F.col("cos_sim") >= cos_min)
             .select("id_a", "id_b", "cos_sim"))
-
-
-def _sweep_bucket_slow(embl, i0, i1, ids, nr, bks_vals, bks_offs, band,
-                       thr, acc_a, acc_b, acc_c):
-    """Per-pair fallback for buckets with ragged dimensions or null
-    vector elements (adversarial inputs only — never the hot path).
-    Reproduces zip_with's pad-with-null semantics: any ragged pair or
-    null product makes the JVM cosine NULL, which the `>= cos_min`
-    filter drops — so those pairs are simply not emitted."""
-    import numpy as np
-
-    n = i1 - i0
-    pyrows = [embl[int(i0) + j].as_py() for j in range(n)]
-    band = int(band)
-    for j in range(1, n):
-        for i in range(j):
-            if ids[i] == ids[j]:
-                continue
-            if band > 0:
-                bi = bks_vals[bks_offs[i0 + i]:bks_offs[i0 + i] + band]
-                bj = bks_vals[bks_offs[i0 + j]:bks_offs[i0 + j] + band]
-                if (bi == bj).any():
-                    continue
-            den = nr[i] * nr[j]
-            if den == 0.0:
-                # Zero-norm guard fires BEFORE the dot product JVM-side
-                # (CASE short-circuit), so a zero-norm side yields 0.0
-                # even against a ragged/NULL-padded partner.
-                cos = 0.0
-            else:
-                a, b = pyrows[i], pyrows[j]
-                if a is None or b is None or len(a) != len(b) \
-                        or any(v is None for v in a) \
-                        or any(v is None for v in b):
-                    continue        # NULL cosine JVM-side -> dropped
-                acc = 0.0
-                for x, y in zip(a, b):
-                    acc = acc + x * y
-                cos = acc / den
-            if cos >= thr or np.isnan(cos):
-                acc_a.append(np.array([ids[i]]))
-                acc_b.append(np.array([ids[j]]))
-                acc_c.append(np.array([cos]))
 
 
 # ---------------------------------------------------------------------------
@@ -857,75 +626,112 @@ SEM_MAX_CLUSTER = 4096   # per-cluster item cap (observed drops, as LSH)
 SEM_MEAN_CLUSTER = 2500  # auto-k target mean (sits well under the cap)
 
 
-def item_norm(emb_col):
-    """Per-item L2 norm carried INSIDE the cluster items struct (field
-    ``nrm``): the greedy sweep then computes each norm once per ITEM
-    instead of once per PAIR (the sweep is O(n^2) pairs), and the
-    zero-norm guard below costs one multiply instead of two extra
-    aggregate folds. sqrt-then-multiply matches the old inline order,
-    so rounded cosines are bit-identical."""
-    return F.sqrt(F.aggregate(emb_col, F.lit(0.0),
-                              lambda acc, v: acc + v * v))
+def _verdicts(n, rows, cos, hi):
+    """(definite, amb) per item of an any-pair verdict over kernel
+    output (``rows`` = the judged item of each pair): an item drops
+    DEFINITELY when one of its cosines is NaN (Spark orders NaN above
+    every double) or >= hi; otherwise its cosines below hi — all at or
+    above the kernel floor — are ambiguous, left for the JVM to round.
+    NULL cosines (dirty pairs) count for nothing."""
+    a = pa.array(cos, type=pa.float64())
+    c = a.to_numpy(zero_copy_only=False)
+    ok = a.is_valid().to_numpy(zero_copy_only=False)
+    dd = np.zeros(n, dtype=bool)
+    dd[rows[ok & (np.isnan(c) | (c >= hi))]] = True
+    amb = [[] for _ in range(n)]
+    am = ok & (c < hi)
+    for r, v in zip(rows[am], c[am]):
+        if not dd[r]:
+            amb[r].append(float(v))
+    return dd, amb
 
 
-def greedy_drop_expr(cos_min: float):
-    """The SemDeDup greedy verdict over a sorted `items`
-    array<struct<c,v,e,nrm>> column: per item y at 0-based position j,
-    dropped iff ANY of the j earlier items is >= cos_min
-    cosine-similar. exists() short-circuits; the first item of every
-    cluster is always kept (empty slice). Shared by semdedup and the
-    incremental SemanticIndex. Zero-norm guard: a raw 0/0 cosine is
-    NaN, which Spark orders ABOVE every real number — unguarded,
-    NaN >= cos_min is TRUE and a zero (empty-doc) vector would drop
-    against anything; guarded, zero vectors match nothing (the
-    _cosine convention)."""
-    return F.expr(
-        "transform(items, (y, j) -> struct("
-        "  y.v AS vec_id, "
-        "  exists(slice(items, 1, j), x -> "
-        "    CASE WHEN x.nrm * y.nrm = 0.0D THEN false ELSE "
-        "    round(aggregate(zip_with(x.e, y.e, (a, b) -> a * b), "
-        "                    cast(0.0 as double), (acc, p) -> acc + p) "
-        "          / (x.nrm * y.nrm), 6) "
-        f"    >= {cos_min} END) AS dropped))")
+def _any_pair_verdicts(df: DataFrame, new_col: str, old_col: str,
+                       cos_min: float) -> DataFrame:
+    """(vec_id, dropped) for every item of the `new_col` item lists:
+    dropped iff some `old_col` item of the same row scores
+    round(cos, 6) >= cos_min against it. With old_col == new_col it is
+    SemDeDup's greedy rule: only EARLIER items count and a zero
+    denominator scores false (the greedy CASE); otherwise every pair
+    counts and a zero denominator scores 0.0. Items are
+    struct<v?, e, nrm>.
 
-
-def batch_vs_index_dropped(new: DataFrame, idx: DataFrame,
-                           cos_min: float,
-                           sweep: str | None = None) -> DataFrame:
-    """Distinct `vec_id`s of ``new`` rows scoring round(cos, 6) >=
-    cos_min against ANY ``idx`` row of the same centroid — the
-    incremental SemanticIndex's batch-vs-index leg.
-
-    Semantics are the old join-filter's, mirrored exactly: NULL
-    cosines (ragged/null vectors) fail the filter -> keep; NaN drops
-    (Spark orders NaN above all doubles); a zero-norm pair scores 0.0
-    via the CASE short-circuit and drops only when cos_min <= 0. The
-    "sql" form is that join (with per-side norms precomputed — one
-    fold per pair instead of three); the default "arrow" form groups
-    both sides by centroid and runs the rectangular BLAS-prefiltered
-    exact kernel (_cand_cos_exact's discipline: dgemm candidates at
-    1e-9 slack, bit-exact left-fold recompute, definite verdicts 1e-6
-    away from the threshold, JVM exists(round(...)) over the ambiguous
-    band). Old-side order inside a cluster is irrelevant (the verdict
-    is an ANY), so collect_list nondeterminism cannot change results."""
-    if sweep is None:
-        sweep = EMB_SWEEP_DEFAULT
-    if sweep != "arrow":
-        cross = (new.alias("n").withColumn("_nn", item_norm(F.col("emb")))
-                 .join(idx.alias("o")
-                       .withColumn("_on", item_norm(F.col("emb"))),
-                       ["centroid_id"])
-                 .where(F.round(_cosine_pre(F.col("n.emb"), F.col("o.emb"),
-                                            F.col("_nn"), F.col("_on")), 6)
-                        >= cos_min))
-        return cross.select(F.col("n.vec_id").alias("vec_id")).distinct()
-
+    Round-exactness without a Python round: `_verdicts` splits the
+    kernel's raw cosines (floor cos_min - 1e-6) into DEFINITE drops
+    (NaN, or >= cos_min + 1e-6) and an `amb` list inside the 2e-6 band
+    — empty for any real corpus — and the JVM finishes with
+    `definite OR exists(amb, c -> round(c, 6) >= cos_min)`: bit-exactly
+    the SQL comparison. NULL cosines keep, as the coalescing consumers
+    of the SQL forms do."""
     from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
                                    StructField, StructType)
 
     lo = float(cos_min) - _SWEEP_MARGIN
     hi = float(cos_min) + _SWEEP_MARGIN
+    square = new_col == old_col
+    out_schema = StructType([
+        StructField("vec_id",
+                    df.schema[new_col].dataType.elementType["v"].dataType),
+        StructField("dropped_def", BooleanType()),
+        StructField("amb", ArrayType(DoubleType()))])
+
+    def judge(batches):
+        for batch in batches:
+            xo, xs, xv, xn = _unpack(batch.column(new_col))
+            yo, _, yv, yn = (xo, xs, xv, xn) if square \
+                else _unpack(batch.column(old_col))
+            items, dd, amb = [], [], []
+            for r in range(batch.num_rows):
+                a0, a1, b0, b1 = xo[r], xo[r + 1], yo[r], yo[r + 1]
+                if a1 == a0 or b1 == b0:
+                    continue
+                nx = xn[a0:a1]
+                mask = np.tril(nx[:, None] * nx[None, :] != 0.0, -1) \
+                    if square else None
+                ii, _, cos = _block_pairs(xv, a0, a1, yv, b0, b1, nx,
+                                          yn[b0:b1], lo, mask)
+                d, am = _verdicts(a1 - a0, ii, cos, hi)
+                items.append(np.arange(a0, a1))
+                dd.append(d)
+                amb.extend(am)
+            if items:
+                yield pa.RecordBatch.from_arrays(
+                    [xs.field("v").take(pa.array(np.concatenate(items))),
+                     pa.array(np.concatenate(dd), type=pa.bool_()),
+                     pa.array(amb, type=pa.list_(pa.float64()))],
+                    names=["vec_id", "dropped_def", "amb"])
+
+    cols = [new_col] if square else [new_col, old_col]
+    judged = df.select(*cols).mapInArrow(judge, out_schema)
+    return judged.select(
+        "vec_id",
+        (F.col("dropped_def")
+         | F.exists("amb", lambda c: F.round(c, 6) >= F.lit(cos_min)))
+        .alias("dropped"))
+
+
+def greedy_verdicts(grouped: DataFrame, cos_min: float) -> DataFrame:
+    """(vec_id, dropped) for every item of every sorted cluster in
+    ``grouped`` (the capped `items: array<struct<c, v, e, nrm>>` frame)
+    under the SemDeDup greedy rule — item j is dropped iff ANY earlier
+    item scores round(cos, 6) >= cos_min against it; zero-norm pairs
+    never match, NaN cosines drop, NULL ones (null/ragged vectors)
+    keep. One seam shared by semdedup and the incremental SemanticIndex
+    so their batch == incremental parity holds by construction."""
+    return _any_pair_verdicts(grouped, "items", "items", cos_min)
+
+
+def batch_vs_index_dropped(new: DataFrame, idx: DataFrame,
+                           cos_min: float) -> DataFrame:
+    """Distinct `vec_id`s of ``new`` rows scoring round(cos, 6) >=
+    cos_min against ANY ``idx`` row of the same centroid — the
+    incremental SemanticIndex's batch-vs-index leg, with the semantics
+    of a centroid-keyed join filtered on round(_cosine_pre(...), 6) >=
+    cos_min: NULL cosines (ragged/null vectors) keep, NaN drops, a
+    zero-norm pair scores 0.0 and drops only when cos_min <= 0. Both
+    sides are grouped per centroid and judged by the block kernel;
+    old-side order inside a cluster is irrelevant (the verdict is an
+    ANY), so collect_list nondeterminism cannot change results."""
     gn = (new.groupBy("centroid_id")
           .agg(F.collect_list(F.struct(
               F.col("vec_id").alias("v"), F.col("emb").alias("e"),
@@ -934,311 +740,15 @@ def batch_vs_index_dropped(new: DataFrame, idx: DataFrame,
           .agg(F.collect_list(F.struct(
               F.col("emb").alias("e"),
               item_norm(F.col("emb")).alias("nrm"))).alias("o_items")))
-    both = gn.join(go, "centroid_id").select("n_items", "o_items")
-    id_type = new.schema["vec_id"].dataType
-    out_schema = StructType([
-        StructField("vec_id", id_type),
-        StructField("dropped_def", BooleanType()),
-        StructField("amb", ArrayType(DoubleType()))])
-
-    def sweep_fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            nl = batch.column("n_items")
-            ol = batch.column("o_items")
-            if isinstance(nl, pa.ChunkedArray):
-                nl = nl.combine_chunks()
-            if isinstance(ol, pa.ChunkedArray):
-                ol = ol.combine_chunks()
-            n_offs, o_offs = nl.offsets.to_numpy(), ol.offsets.to_numpy()
-            ns, os_ = nl.values, ol.values
-            n_ids = ns.field("v").to_numpy(zero_copy_only=False)
-            n_nrm = ns.field("nrm").to_numpy(zero_copy_only=False)
-            o_nrm = os_.field("nrm").to_numpy(zero_copy_only=False)
-            nel, oel = ns.field("e"), os_.field("e")
-            ne_offs, oe_offs = nel.offsets.to_numpy(), \
-                oel.offsets.to_numpy()
-            dirty = (nel.null_count > 0 or nel.values.null_count > 0
-                     or oel.null_count > 0 or oel.values.null_count > 0)
-            if not dirty:
-                ne_vals = nel.values.to_numpy(zero_copy_only=False)
-                oe_vals = oel.values.to_numpy(zero_copy_only=False)
-            out_ids, out_def, out_amb = [], [], []
-            for r in range(len(nl)):
-                a0, a1 = n_offs[r], n_offs[r + 1]
-                b0, b1 = o_offs[r], o_offs[r + 1]
-                m, p = a1 - a0, b1 - b0
-                if m == 0 or p == 0:
-                    continue
-                ids = n_ids[a0:a1]
-                nx = n_nrm[a0:a1]
-                ny = o_nrm[b0:b1]
-                ndims = np.diff(ne_offs[a0:a1 + 1])
-                odims = np.diff(oe_offs[b0:b1 + 1])
-                if dirty or ndims.min() != ndims.max() \
-                        or odims.min() != odims.max() \
-                        or (m and p and ndims[0] != odims[0]):
-                    dd, amb = _rect_slow(np, nel, oel, int(a0), m,
-                                         int(b0), p, nx, ny, lo, hi)
-                else:
-                    d = int(ndims[0])
-                    X = ne_vals[ne_offs[a0]:ne_offs[a1]].reshape(m, d) \
-                        if d else np.zeros((m, 0))
-                    Y = oe_vals[oe_offs[b0]:oe_offs[b1]].reshape(p, d) \
-                        if d else np.zeros((p, 0))
-                    den = nx[:, None] * ny[None, :]
-                    B = X @ Y.T if d else np.zeros((m, p))
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        B /= den
-                    np.copyto(B, 0.0, where=(den == 0.0))
-                    cand = ~np.isfinite(B) | (B >= lo - 1e-9)
-                    ri, ci = np.nonzero(cand)
-                    dd = np.zeros(m, dtype=bool)
-                    amb = [[] for _ in range(m)]
-                    if len(ri):
-                        acc = np.zeros(len(ri))
-                        for t in range(d):
-                            acc += X[ri, t] * Y[ci, t]   # exact fold
-                        dend = nx[ri] * ny[ci]
-                        with np.errstate(divide="ignore",
-                                         invalid="ignore"):
-                            cos = acc / dend
-                        cos = np.where(dend == 0.0, 0.0, cos)
-                        t_ = np.isnan(cos) | (cos >= hi)
-                        dd[ri[t_]] = True
-                        am = ~t_ & (cos >= lo) & (cos < hi)
-                        for j, c in zip(ri[am], cos[am]):
-                            if not dd[j]:
-                                amb[int(j)].append(float(c))
-                        for j in np.nonzero(dd)[0]:
-                            amb[int(j)] = []
-                out_ids.append(ids)
-                out_def.append(np.asarray(dd, dtype=bool))
-                out_amb.extend(amb)
-            if out_ids:
-                pa_id = ns.field("v").type
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(out_ids)).cast(pa_id),
-                     pa.array(np.concatenate(out_def), type=pa.bool_()),
-                     pa.array(out_amb, type=pa.list_(pa.float64()))],
-                    names=["vec_id", "dropped_def", "amb"])
-
-    judged = both.mapInArrow(sweep_fn, out_schema)
-    return (judged.where(
-        F.col("dropped_def")
-        | F.exists("amb", lambda c: F.round(c, 6) >= F.lit(cos_min)))
-        .select("vec_id").distinct())
-
-
-def _rect_slow(np, nel, oel, a0, m, b0, p, nx, ny, lo, hi):
-    """Per-pair fallback of the rectangular kernel (null/ragged
-    vectors), in the SQL CASE order: real zero den -> 0.0 (even
-    ragged); NULL norm or padded dot -> NULL (keep); NaN -> drop."""
-    import math
-
-    nrows = [nel[a0 + j].as_py() for j in range(m)]
-    orows = [oel[b0 + j].as_py() for j in range(p)]
-    dd = [False] * m
-    amb = [[] for _ in range(m)]
-    for j in range(m):
-        for i in range(p):
-            cos = _case_cos(nrows[j], orows[i], nx[j] * ny[i])
-            if cos is None:
-                continue
-            if math.isnan(cos) or cos >= hi:
-                dd[j] = True
-                break
-            if lo <= cos < hi:
-                amb[j].append(cos)
-        if dd[j]:
-            amb[j] = []
-    return dd, amb
-
-
-def _case_cos(a, b, den):
-    """round-free _cosine over possibly null/ragged lists in the SQL
-    CASE's order: den == 0.0 (a REAL zero) short-circuits to 0.0
-    before the dot; NULL norms (NaN den from null elements is caught
-    by the null checks) or a padded dot give None."""
-    import math
-
-    if isinstance(den, float) and den == 0.0 \
-            and a is not None and b is not None \
-            and all(v is not None for v in a) \
-            and all(v is not None for v in b):
-        return 0.0
-    if a is None or b is None or len(a) != len(b) \
-            or any(v is None for v in a) or any(v is None for v in b):
-        return None
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc / den
-
-
-def greedy_verdicts(grouped: DataFrame, cos_min: float,
-                    sweep: str | None = None) -> DataFrame:
-    """(vec_id, dropped) for every item of every sorted cluster in
-    ``grouped`` (the capped `items: array<struct<c, v, e, nrm>>` frame)
-    under the SemDeDup greedy rule — item j is dropped iff ANY earlier
-    item scores round(cos, 6) >= cos_min against it.
-
-    One seam shared by semdedup and the incremental SemanticIndex so
-    their batch == incremental parity holds by construction. `sweep`
-    picks the implementation: "arrow" (vectorized NumPy, default) or
-    "sql" (the pure-JVM greedy_drop_expr). Verdict equivalence note:
-    the SQL exists() can return NULL for a pair whose cosine is NULL
-    (null elements / ragged dims) — both consumers coalesce NULL to
-    false/keep, and the Arrow path emits false directly; the parity
-    test compares post-coalesce semantics."""
-    if sweep is None:
-        sweep = EMB_SWEEP_DEFAULT
-    if sweep == "arrow":
-        return _greedy_arrow(grouped, cos_min)
-    return (grouped.select(F.explode(greedy_drop_expr(cos_min)).alias("r"))
-            .select(F.col("r.vec_id").alias("vec_id"),
-                    F.col("r.dropped").alias("dropped")))
-
-
-def _greedy_arrow(grouped: DataFrame, cos_min: float) -> DataFrame:
-    """Vectorized greedy sweep: mapInArrow + NumPy (guide §4.2), same
-    kernel discipline as _sweep_pairs_arrow — exact left-fold dot
-    products, JVM-computed norms reused, NO Python rounding anywhere.
-
-    Round-exactness without a Python round: each item returns a
-    DEFINITE verdict when every relevant cosine is at least 1e-6 away
-    from cos_min (round(x, 6) moves x by < 1e-6, so the comparison is
-    decided), plus an `amb` array of the raw cosines inside the
-    ambiguous band (width 2e-6 — empty for any real corpus). The final
-    verdict is `definite OR exists(amb, c -> round(c, 6) >= cos_min)`,
-    evaluated in the JVM — bit-exactly the SQL sweep's comparison.
-    Pairs the SQL CASE scores as false (zero-norm sides) or NULL
-    (null/ragged vectors — see greedy_verdicts) contribute nothing;
-    NaN cosines drop (Spark orders NaN above all doubles)."""
-    from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
-                                   StructField, StructType)
-
-    lo = float(cos_min) - _SWEEP_MARGIN
-    hi = float(cos_min) + _SWEEP_MARGIN
-    id_type = grouped.schema["items"].dataType.elementType["v"].dataType
-    out_schema = StructType([
-        StructField("vec_id", id_type),
-        StructField("dropped_def", BooleanType()),
-        StructField("amb", ArrayType(DoubleType()))])
-
-    def sweep(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            items = batch.column("items")
-            if isinstance(items, pa.ChunkedArray):
-                items = items.combine_chunks()
-            offs = items.offsets.to_numpy()
-            struct = items.values
-            vec_ids = struct.field("v").to_numpy(zero_copy_only=False)
-            nrms = struct.field("nrm").to_numpy(zero_copy_only=False)
-            embl = struct.field("e")
-            emb_offs = embl.offsets.to_numpy()
-            slow = (embl.null_count > 0 or embl.values.null_count > 0
-                    or struct.field("nrm").null_count > 0)
-            if not slow:
-                emb_vals = embl.values.to_numpy(zero_copy_only=False)
-            out_ids, out_def, out_amb = [], [], []
-            for r in range(len(items)):
-                i0, i1 = offs[r], offs[r + 1]
-                n = i1 - i0
-                if n == 0:
-                    continue
-                ids = vec_ids[i0:i1]
-                nr = nrms[i0:i1]
-                dims = np.diff(emb_offs[i0:i1 + 1])
-                uniform = dims.min() == dims.max()
-                if slow or not uniform:
-                    dd, amb = _greedy_cluster_slow(embl, int(i0), n, nr,
-                                                   lo, hi)
-                else:
-                    d = int(dims[0])
-                    if d == 0:
-                        X = np.zeros((n, 0))
-                    else:
-                        X = emb_vals[emb_offs[i0]:emb_offs[i1]] \
-                            .reshape(n, d)
-                    # zero-norm pairs are excluded by the kernel —
-                    # exactly the CASE -> false rule of the SQL sweep.
-                    ii, jj, cos = _cand_cos_exact(np, X, nr, lo)
-                    dd = np.zeros(n, dtype=bool)
-                    amb = [[] for _ in range(n)]
-                    if len(ii):
-                        t = np.isnan(cos) | (cos >= hi)
-                        dd[jj[t]] = True
-                        am = ~t & (cos >= lo)
-                        for j, c in zip(jj[am], cos[am]):
-                            if not dd[j]:
-                                amb[int(j)].append(float(c))
-                        for j in np.nonzero(dd)[0]:
-                            amb[int(j)] = []
-                out_ids.append(ids)
-                out_def.append(dd)
-                out_amb.extend(amb)
-            if out_ids:
-                pa_id = struct.field("v").type
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(out_ids)).cast(pa_id),
-                     pa.array(np.concatenate(out_def),
-                              type=pa.bool_()),
-                     pa.array(out_amb,
-                              type=pa.list_(pa.float64()))],
-                    names=["vec_id", "dropped_def", "amb"])
-
-    judged = grouped.select("items").mapInArrow(sweep, out_schema)
-    return judged.select(
-        "vec_id",
-        (F.col("dropped_def")
-         | F.exists("amb", lambda c: F.round(c, 6) >= F.lit(cos_min)))
-        .alias("dropped"))
-
-
-def _greedy_cluster_slow(embl, i0, n, nr, lo, hi):
-    """Per-pair fallback for clusters with null/ragged vectors.
-    NULL-cosine pairs (ragged dims, null elements, null norms) score
-    NULL in the SQL sweep, which both consumers treat as keep — so
-    they contribute nothing here."""
-    import math
-
-    pyrows = [embl[i0 + j].as_py() for j in range(n)]
-    dd = [False] * n
-    amb = [[] for _ in range(n)]
-    for j in range(1, n):
-        for i in range(j):
-            den = nr[i] * nr[j]
-            if den == 0.0:
-                continue                    # CASE -> false
-            a, b = pyrows[i], pyrows[j]
-            if a is None or b is None or len(a) != len(b) \
-                    or any(v is None for v in a) \
-                    or any(v is None for v in b):
-                continue                    # NULL cosine -> keep
-            acc = 0.0
-            for x, y in zip(a, b):
-                acc = acc + x * y
-            raw = acc / den
-            if math.isnan(raw) or raw >= hi:
-                dd[j] = True
-            elif lo <= raw < hi:
-                amb[j].append(raw)
-        if dd[j]:
-            amb[j] = []
-    return dd, amb
+    return (_any_pair_verdicts(gn.join(go, "centroid_id"),
+                               "n_items", "o_items", cos_min)
+            .where("dropped").select("vec_id").distinct())
 
 
 def semdedup(emb: DataFrame, cos_min: float = 0.95,
              k: int = None, iters: int = IVF_ITERS,
              codebook: DataFrame = None,
-             max_cluster: int = SEM_MAX_CLUSTER,
-             sweep: str | None = None) -> DataFrame:
+             max_cluster: int = SEM_MAX_CLUSTER) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): k-means-cluster the
     embeddings, then inside each cluster drop every vector that is
@@ -1254,25 +764,26 @@ def semdedup(emb: DataFrame, cos_min: float = 0.95,
     sem_keep). Downstream joins `WHERE sem_keep` to materialize the
     deduplicated corpus.
 
-    Scale shape: the codebook broadcasts (train once via
+    Scale shape: the codebook ships to the tasks (train once via
     kmeans_codebook / vector_index.CodebookIndex, pass it in);
-    assignment is one broadcast cross join + a vec_id window (ONE hash
-    exchange of (vec_id, emb)); then ONE exchange groups each cluster
-    and the O(n_c^2) cosine sweep runs LOCALLY per cluster via an
-    indexed HOF — no pair explosion ever shuffles, the verdict comes
-    out of the same task that holds the cluster. Per-task work is
-    bounded by `max_cluster` (deterministic array_sort truncation with
-    the observed lsh_cap drop metric — size k so the MEAN cluster sits
-    well under the cap, k ~ corpus/2500 with the 4096 default: the 10x
-    evidence run at 500k/k=200 measured max natural cluster 2780 with
-    zero drops; k ~ corpus/5000 would put the mean itself above the
-    cap and truncate most clusters). With ``k=None`` (the default) and
-    no prebuilt codebook, k derives from that rule via one count()
-    action at plan build — a fixed small k on a large corpus would
-    silently cap-truncate ~every cluster and pass ~everything as
-    sem_keep=true (the derive_salt_buckets precedent: data-sized, not
-    guessed). That is the paper's own cost profile: SemDeDup is
-    O(N^2/k) cosine work, paid map-side."""
+    assignment is the block-kernel argmax plus a vec_id window over
+    ~1 candidate per vector (ONE hash exchange of (vec_id, emb)); then
+    ONE exchange groups each cluster and the O(n_c^2) greedy sweep
+    runs LOCALLY per cluster in the block kernel — no pair explosion
+    ever shuffles, the verdict comes out of the same task that holds
+    the cluster. Per-task work is bounded by `max_cluster`
+    (deterministic array_sort truncation with the observed lsh_cap drop
+    metric — size k so the MEAN cluster sits well under the cap,
+    k ~ corpus/2500 with the 4096 default: the 10x evidence run at
+    500k/k=200 measured max natural cluster 2780 with zero drops;
+    k ~ corpus/5000 would put the mean itself above the cap and
+    truncate most clusters). With ``k=None`` (the default) and no
+    prebuilt codebook, k derives from that rule via one count() action
+    at plan build — a fixed small k on a large corpus would silently
+    cap-truncate ~every cluster and pass ~everything as sem_keep=true
+    (the derive_salt_buckets precedent: data-sized, not guessed). That
+    is the paper's own cost profile: SemDeDup is O(N^2/k) cosine work,
+    paid map-side."""
     if codebook is None and k is None:
         k = max(IVF_K, emb.count() // SEM_MEAN_CLUSTER)
     cents = codebook if codebook is not None \
@@ -1281,11 +792,10 @@ def semdedup(emb: DataFrame, cos_min: float = 0.95,
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
     # assigned feeds TWO plan branches (the cluster sweep and the
     # row-completeness join below); without materialization Catalyst
-    # plans them as independent subtrees and the broadcast-argmax
-    # assignment runs twice per query (measured: 2.5 s per pass at
-    # 40k x 64d — round 6). A LAZY localCheckpoint computes it once
-    # and shares the partitions; same lineage-truncation discipline
-    # as duplicate_clusters.
+    # plans them as independent subtrees and the assignment runs twice
+    # per query (measured: 2.5 s per pass at 40k x 64d — round 6). A
+    # LAZY localCheckpoint computes it once and shares the partitions;
+    # same lineage-truncation discipline as duplicate_clusters.
     assigned = _assign_with_cos(base, cents).localCheckpoint(eager=False)
     # array_sort on struct(c, v, e, nrm) orders lexicographically by
     # (cos_c ASC, vec_id ASC); vec_id is unique so the later fields are
@@ -1298,7 +808,7 @@ def semdedup(emb: DataFrame, cos_min: float = 0.95,
                    item_norm(F.col("emb")).alias("nrm"))))
                    .alias("items")))
     grouped = _cap_bucket_items(grouped, max_cluster)
-    judged = (greedy_verdicts(grouped, cos_min, sweep=sweep)
+    judged = (greedy_verdicts(grouped, cos_min)
               .select("vec_id", (~F.col("dropped")).alias("_sk")))
     # Row-completeness under the cap: a truncated item vanishes from
     # `items`, so its verdict must not vanish with it — every assigned

@@ -63,17 +63,26 @@ class IcebergUnavailable(RuntimeError):
     """Raised when the Iceberg Spark runtime is not on the classpath."""
 
 
+# observed_value's answer when the metrics row never arrived.
+UNFIRED = object()
+
+
 def observed_value(obs: Observation, key: str,
-                   timeout_sec: float = 5.0):
-    """Bounded Observation read: the metric value, or None when the
-    observed subtree never materialized. Two failure modes a bare
-    ``obs.get`` does not survive: AQE's PropagateEmptyRelation can
-    collapse the observed subtree to an empty LocalTableScan (get then
-    throws inside toPyRow), and a plan whose CollectMetrics node never
-    executed leaves get BLOCKING forever (the dedup._CapCollector
-    lesson — e.g. an extract_fn whose output does not derive from the
-    observed input). Polls the JVM getRowOrEmpty, which resolves on the
-    first check in the normal already-fired case."""
+                   timeout_sec: float = 5.0, unfired=None):
+    """Bounded Observation read, tri-state:
+      * the metric value, once the observed subtree fired;
+      * None when it fired but the row is unreadable: AQE's
+        PropagateEmptyRelation collapsed the observed subtree to an
+        empty LocalTableScan (get then throws inside toPyRow), which
+        happens exactly when the observed input is empty;
+      * ``unfired`` (default None) when no row arrived by the deadline:
+        a plan whose CollectMetrics node never executed leaves get
+        BLOCKING forever (the dedup._CapCollector lesson — e.g. an
+        extract_fn whose output does not derive from the observed
+        input), and a slow listener can miss a short deadline. Pass
+        UNFIRED where "unknown" must not read as "empty".
+    Polls the JVM getRowOrEmpty — defined only once the metrics fired —
+    which resolves on the first check in the normal case."""
     deadline = time.monotonic() + timeout_sec
     while True:
         jo = getattr(obs, "_jo", None)
@@ -83,12 +92,34 @@ def observed_value(obs: Observation, key: str,
             except Exception:          # noqa: BLE001 — telemetry only
                 return None
         if time.monotonic() >= deadline:
-            return None
+            return unfired
         # Not fired yet: sleep between polls — a never-firing
         # observation would otherwise spin py4j RPCs at full rate for
         # the whole timeout (round-6 ADVICE). The already-fired fast
         # path above still resolves on iteration one.
         time.sleep(0.05)
+
+
+def iceberg_write_outcome(observed, existed: bool, added_records):
+    """(rows_out, truncate) of an IcebergStore bucket write, from the
+    tri-state observed row count:
+      * a count: that many rows; truncate the partition when it is 0 and
+        the table existed — dynamic overwritePartitions with an EMPTY
+        input replaces nothing, so stale rows of a crashed prior write
+        of this bucket would stay visible (resurrecting tombstone-
+        deleted docs);
+      * None (fired, elided-empty): zero rows, same truncation — the old
+        fallback counted the partition, which still holds those stale
+        rows (round-6 ADVICE, medium);
+      * UNFIRED: the count is UNKNOWN, not zero — the write may well
+        have replaced the partition with real rows, which a DELETE
+        would destroy. rows_out comes from the new snapshot's
+        added-records summary (``added_records()``), and nothing is
+        deleted."""
+    if observed is UNFIRED:
+        return int(added_records()), False
+    rows = int(observed or 0)
+    return rows, rows == 0 and existed
 
 
 class SnapshotStore(abc.ABC):
@@ -457,25 +488,21 @@ class IcebergStore(SnapshotStore):
         else:
             (tagged.writeTo(self.table).partitionedBy("bucket")
              .using("iceberg").create())
-        rows = observed_value(obs, "rows_out")
-        if rows is None:
-            # AQE elides the observed subtree exactly when the write's
-            # input is empty, so None means ZERO rows written — the
-            # old fallback counted the table partition, which still
-            # holds stale rows from a crashed prior write: it returned
-            # a nonzero rows_out AND skipped the truncation below,
-            # committing resurrected (possibly tombstone-deleted) rows
-            # with a wrong lineage count (round-6 ADVICE, medium).
-            rows = 0
-        # Dynamic overwritePartitions with an EMPTY input replaces
-        # nothing — stale rows from a crashed prior write of this
-        # bucket would stay visible (resurrecting tombstone-deleted
-        # docs). Truncate the partition explicitly when this write
-        # produced zero rows.
-        if int(rows) == 0 and existed:
+        rows, truncate = iceberg_write_outcome(
+            observed_value(obs, "rows_out", unfired=UNFIRED), existed,
+            self._added_records)
+        if truncate:
             self.spark.sql(f"DELETE FROM {self.table} "
                            f"WHERE bucket = {int(bucket)}")
-        return int(rows)
+        return rows
+
+    def _added_records(self) -> int:
+        """added-records of the table's newest snapshot (the write just
+        made)."""
+        row = self.spark.sql(
+            f"SELECT summary['added-records'] AS n FROM {self.table}"
+            f".snapshots ORDER BY committed_at DESC LIMIT 1").collect()
+        return int(row[0]["n"] or 0) if row else 0
 
     def commit(self, lineage: Lineage) -> None:
         lineage.seq = self._next_seq()

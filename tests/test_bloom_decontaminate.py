@@ -130,6 +130,30 @@ def test_registry_scale_bitmap_2pow26(spark):
     # the literal path took >290s at this size; the frame path is
     # seconds (generous bound so slow CI hosts don't flake)
     assert elapsed < 120
+    # The property behind that bound: the plan carries no per-word
+    # literals — 2^20 words would be 2^20 Literal nodes (or one huge
+    # array literal); the executor-built bitmap leaves a handful of
+    # small constants, independent of m_bits.
+    lits = _plan_literals(out, limit=500)
+    assert len(lits) < 500 and max(map(len, lits)) < 100, lits[:5]
+
+
+def _plan_literals(df, limit):
+    """toString of every Literal expression node in df's analyzed
+    plan, stopping after ``limit``."""
+    found, plans = [], [df._jdf.queryExecution().analyzed()]
+    while plans and len(found) < limit:
+        plan = plans.pop()
+        kids, exprs = plan.children(), plan.expressions()
+        plans.extend(kids.apply(i) for i in range(kids.size()))
+        todo = [exprs.apply(i) for i in range(exprs.size())]
+        while todo and len(found) < limit:
+            e = todo.pop()
+            if e.getClass().getSimpleName() == "Literal":
+                found.append(e.toString())
+            kids = e.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return found
 
 
 def test_bitmap_frame_plan_shape(spark):

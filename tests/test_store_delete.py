@@ -171,3 +171,47 @@ def test_iceberg_probe_raises_cleanly(spark):
         pytest.skip("iceberg jars present; unavailability path not testable")
     with pytest.raises(IcebergUnavailable):
         IcebergStore(spark, "nope")
+
+
+def test_observed_value_tells_never_fired_from_empty(spark):
+    """The tri-state read: a never-executed observation is UNFIRED (not
+    "zero rows"), an elided-empty input fires with no row (None), and a
+    real write fires its count."""
+    from pyspark.sql import Observation
+
+    from document_ai_spark.streaming.store import UNFIRED, observed_value
+
+    never = Observation("never")
+    spark.range(3).observe(never, F.count(F.lit(1)).alias("n"))
+    assert observed_value(never, "n", timeout_sec=0.2,
+                          unfired=UNFIRED) is UNFIRED
+    assert observed_value(never, "n", timeout_sec=0.2) is None
+    for src, want in ((spark.range(100).where(F.col("id") > 1000), 0),
+                      (spark.range(3), 3)):
+        obs = Observation()
+        (src.observe(obs, F.count(F.lit(1)).alias("n"))
+         .write.format("noop").mode("overwrite").save())
+        got = observed_value(obs, "n", unfired=UNFIRED)
+        assert got is not UNFIRED and int(got or 0) == want
+
+
+def test_iceberg_write_never_deletes_on_unknown_count():
+    """IcebergStore.write_bucket's decision: a poll timeout after a
+    successful write must not truncate the bucket it just wrote — the
+    count comes from the snapshot's added-records instead. A fired
+    zero / elided-empty count still truncates stale rows."""
+    from document_ai_spark.streaming.store import (
+        UNFIRED,
+        iceberg_write_outcome,
+    )
+
+    def unused():
+        raise AssertionError("snapshot summary read on a fired count")
+
+    assert iceberg_write_outcome(UNFIRED, True, lambda: 7) == (7, False)
+    assert iceberg_write_outcome(UNFIRED, True, lambda: 0) == (0, False)
+    assert iceberg_write_outcome(UNFIRED, False, lambda: 4) == (4, False)
+    assert iceberg_write_outcome(5, True, unused) == (5, False)
+    assert iceberg_write_outcome(0, True, unused) == (0, True)
+    assert iceberg_write_outcome(None, True, unused) == (0, True)
+    assert iceberg_write_outcome(None, False, unused) == (0, False)
